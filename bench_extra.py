@@ -229,7 +229,7 @@ def main_linksdetail() -> None:
         ("two_phase", lambda: S.score_pairs(
             pairs, records, comparisons, prior=cfg.prior,
             threshold=cfg.threshold, validate=False,
-            expensive_cols=[{"turn_texts"}])),
+            expensive_cols={"turn_texts"})),
         ("phase1_only", lambda: S.score_pairs(
             pairs, records,
             [c for c in comparisons if c.input_col != "turn_texts"],

@@ -42,7 +42,11 @@ def levenshtein_similarity(l: Column, r: Column) -> Column:
 
 
 def token_set_jaccard(l: Column, r: Column) -> Column:
-    """|tokens(l) ∩ tokens(r)| / |tokens(l) ∪ tokens(r)| — built-ins only."""
+    """|tokens(l) ∩ tokens(r)| / |tokens(l) ∪ tokens(r)| — built-ins only.
+
+    Splits both strings per call; the reference for
+    :func:`hashed_token_set_jaccard`, which the default transcript
+    comparisons use."""
     lt = F.array_distinct(F.split(l, " "))
     rt = F.array_distinct(F.split(r, " "))
     inter = F.size(F.array_intersect(lt, rt))

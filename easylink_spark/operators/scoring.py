@@ -19,7 +19,6 @@ connected components).
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -111,47 +110,17 @@ def _leveled(
     return g
 
 
-def default_transcript_comparisons(
-    token_hash: bool | None = None,
-) -> list[Comparison]:
+def default_transcript_comparisons() -> list[Comparison]:
     """Comparison spec for the transcript payload (north rule: JW on
     normalized first-turn text, token-set Jaccard on full text,
     turn-alignment Levenshtein over ordered turns).
 
-    ``token_hash`` (env ``EASYLINK_TOKEN_HASH_JACCARD=1``) switches the
-    full-text Jaccard to precomputed distinct token-hash arrays
-    (``features.full_tokens``): identical gamma levels (hash collisions
-    ~n_tokens^2/2^64 aside), tokenization paid once per RECORD instead of
-    once per candidate PAIR.  Default OFF, matched to the measured host:
-    the A/B on the 60k-entity corpus cut the 1-core wall 1.46x (930 s ->
-    637 s, cpu 1008 -> 714 s) but bought ZERO wall at >= 4 threads (both
-    variants ~255-314 s; the hash path's 4-core cpu inflates 714 -> ~1100 s
-    where the split path inflates only 1008 -> ~1045 s) — on this shared
-    single-memory-bus guest the wide side is bandwidth-capped, and the
-    cache-unfriendly int64 array_intersect stalls where the compute-dense
-    per-pair split hides under the same ceiling.  On a multi-executor
-    cluster (private bus per executor, per-core behavior matches the
-    1-core measurement) turn it ON.  BENCH/attempts_r5.jsonl holds the
-    raw rows (engines 93e650e / 8885e38 vs r5a)."""
-    if token_hash is None:
-        token_hash = os.environ.get("EASYLINK_TOKEN_HASH_JACCARD", "0") == "1"
-    full_jaccard = (
-        Comparison(
-            "full_jaccard",
-            "full_tokens",
-            _leveled(C.hashed_token_set_jaccard, [0.70, 0.45]),
-            m=[0.03, 0.15, 0.82],
-            u=[0.94, 0.05, 0.01],
-        )
-        if token_hash
-        else Comparison(
-            "full_jaccard",
-            "full_text_norm",
-            _leveled(C.token_set_jaccard, [0.70, 0.45]),
-            m=[0.03, 0.15, 0.82],
-            u=[0.94, 0.05, 0.01],
-        )
-    )
+    The full-text Jaccard runs on the per-record distinct token-hash arrays
+    (``features.full_tokens``), so tokenization is paid once per record
+    instead of once per candidate pair, and the pair join moves fixed-width
+    int64 arrays instead of the full text.  Gamma levels equal those of
+    ``C.token_set_jaccard`` on ``full_text_norm`` (hash collisions
+    ~n_tokens^2/2^64 aside)."""
     return [
         Comparison(
             "first_jw",
@@ -160,7 +129,13 @@ def default_transcript_comparisons(
             m=[0.02, 0.08, 0.90],
             u=[0.90, 0.08, 0.02],
         ),
-        full_jaccard,
+        Comparison(
+            "full_jaccard",
+            "full_tokens",
+            _leveled(C.hashed_token_set_jaccard, [0.70, 0.45]),
+            m=[0.03, 0.15, 0.82],
+            u=[0.94, 0.05, 0.01],
+        ),
         Comparison(
             "turn_align",
             "turn_texts",
@@ -339,28 +314,18 @@ def score_pairs(
     prior: float = 0.01,
     threshold: float = 0.5,
     validate: bool = True,
-    expensive_cols: set[str] | list[set[str]] | None = None,
+    expensive_cols: set[str] | None = None,
 ) -> DataFrame:
     """End-to-end scoring: attach attributes, gammas, FS probability,
     threshold filter (P2) -> links contract.
 
-    ``expensive_cols`` enables MULTI-PHASE scoring (splink's "filter on
+    ``expensive_cols`` enables TWO-PHASE scoring (splink's "filter on
     match weight before expensive comparisons" idea): phase 1 attaches only
     the cheap attribute columns and computes their gammas; a pair is pruned
-    when even the MAXIMUM possible weight from the not-yet-scored
-    comparisons cannot lift it over the threshold — a sound bound, so the
-    surviving link set is byte-identical to single-phase scoring.  Only
-    survivors join the deferred columns and pay their comparators.
-
-    A ``set`` defers all named columns in one second phase.  A ``list`` of
-    sets defers them as an ORDERED CASCADE, cheapest first: each phase
-    re-tightens the bound with the weights it just computed before the next
-    (more expensive) phase joins its columns.  With pure-Python comparators
-    in the middle tier (e.g. Jaro-Winkler without a native fast path) and
-    an O(L^2) alignment comparator at the end, the cascade prunes most
-    pairs on pure-JVM expressions, sends only plausible ones across the
-    Arrow boundary, and reserves the alignment work for pairs that survive
-    both — at web scale most candidate pairs die in the first tier.
+    when even the MAXIMUM possible weight of the deferred comparisons
+    cannot lift it over the threshold — a sound bound, so the surviving
+    link set is byte-identical to single-phase scoring.  Only survivors
+    join the deferred columns and pay their comparators.
 
     ``validate=False`` skips the in-plan contract check — callers that
     checkpoint the result validate the *stored* table instead (each
@@ -377,17 +342,9 @@ def score_pairs(
     par = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     pairs = pairs.repartition(par, F.col(f"`{LEFT_DATASET}`"), F.col(f"`{LEFT_ID}`"))
 
-    if isinstance(expensive_cols, (set, frozenset)):
-        phase_cols: list[set[str]] = [set(expensive_cols)]
-    else:
-        phase_cols = [set(s) for s in (expensive_cols or [])]
-    deferred_all = set().union(*phase_cols) if phase_cols else set()
-    cheap = [c for c in comparisons if c.input_col not in deferred_all]
-    deferred = [
-        p
-        for p in ([c for c in comparisons if c.input_col in s] for s in phase_cols)
-        if p
-    ]
+    expensive_cols = expensive_cols or set()
+    cheap = [c for c in comparisons if c.input_col not in expensive_cols]
+    deferred = [c for c in comparisons if c.input_col in expensive_cols]
 
     def cols_of(comps: list[Comparison]) -> list[str]:
         out = sorted({c.input_col for c in comps})
@@ -399,57 +356,39 @@ def score_pairs(
         # capped by max_k log2(m_k/u_k); a tf-adjusted deferred comparison
         # can exceed it by tf_weight*log2(u_k/tf(v)) — unbounded for rare
         # values — which would break the byte-identical guarantee.
-        if any(c.tf_adjustment for p in deferred for c in p):
+        if any(c.tf_adjustment for c in deferred):
             raise ValueError(
-                "multi-phase scoring (expensive_cols) does not support "
+                "two-phase scoring (expensive_cols) does not support "
                 "tf-adjusted deferred comparisons; score them single-phase"
             )
         # threshold in weight space: p >= t  <=>  w >= log2(t/(1-t))
         w_t = math.log2(threshold / (1.0 - threshold))
-
-        def max_weight(comps: list[Comparison]) -> float:
-            # 0.0 included: the null level (gamma -1) contributes zero
-            # weight, which is the max when every level weight is negative
-            return sum(
-                max([math.log2(m / u) for m, u in zip(c.m, c.u)] + [0.0])
-                for c in comps
-            )
-
-        scored = list(cheap)
-        cur = compute_gammas(
+        # best case of the deferred comparisons; 0.0 included: the null
+        # level (gamma -1) contributes zero weight, which is the max when
+        # every level weight is negative
+        max_deferred = sum(
+            max([math.log2(m / u) for m, u in zip(c.m, c.u)] + [0.0])
+            for c in deferred
+        )
+        phase1 = compute_gammas(
             attach_pair_attributes(pairs, records, cols_of(cheap)), cheap
         )
-        for i, phase in enumerate(deferred):
-            # prune on the scored-so-far weight + the best case of EVERY
-            # not-yet-scored comparison (this phase's and later phases')
-            rest = max_weight([c for p in deferred[i:] for c in p])
-            bound = fs_probability(cur, scored, prior).withColumnRenamed(
-                "match_weight", "_w_partial"
+        survivors = (
+            fs_probability(phase1, cheap, prior)
+            .withColumnRenamed("match_weight", "_w_partial")
+            .filter(F.col("_w_partial") + F.lit(max_deferred) >= F.lit(w_t))
+            .select(
+                *[F.col(f"`{c}`") for c in PAIR_COLS],
+                *[F.col(c.gamma_col()) for c in cheap],
+                # tf columns of cheap tf-adjusted comparisons feed the final
+                # fs_probability and must survive the phase boundary
+                *[F.col(f"`{c.tf_col()}_l`") for c in cheap if c.tf_adjustment],
             )
-            survivors = bound.filter(
-                F.col("_w_partial") + F.lit(rest) >= F.lit(w_t)
-            )
-            cur = compute_gammas(
-                attach_pair_attributes(
-                    survivors.select(
-                        *[F.col(f"`{c}`") for c in PAIR_COLS],
-                        *[F.col(c.gamma_col()) for c in scored],
-                        # tf columns of scored tf-adjusted comparisons feed
-                        # the final fs_probability and must survive the
-                        # phase boundary
-                        *[
-                            F.col(f"`{c.tf_col()}_l`")
-                            for c in scored
-                            if c.tf_adjustment
-                        ],
-                    ),
-                    records,
-                    cols_of(phase),
-                ),
-                phase,
-            )
-            scored += phase
-        gammas = cur
+        )
+        gammas = compute_gammas(
+            attach_pair_attributes(survivors, records, cols_of(deferred)),
+            deferred,
+        )
     else:
         attrs = attach_pair_attributes(pairs, records, cols_of(comparisons))
         gammas = compute_gammas(attrs, comparisons)

@@ -145,26 +145,24 @@ def run_dedup(
                 gammas, comparisons, cfg.prior, max_iter=cfg.em_iterations
             )
             gammas.unpersist()
-        # two-phase scoring: phase 1 runs the full-text Jaccard (string
-        # split per pair by default; EASYLINK_TOKEN_HASH_JACCARD=1 switches
-        # to per-record token-hash arrays — see
-        # default_transcript_comparisons for the measured trade), role
-        # signature AND the Jaro-Winkler pandas UDF (short first-turn
-        # strings, cheap even as pure Python); only pairs whose phase-1
-        # weight can still clear the threshold join the fat per-turn
-        # arrays and pay the O(L^2) turn-alignment comparator.  The bound
-        # is sound, so the final links are byte-identical to single-phase
-        # scoring.  Deferring JW into its own middle tier was measured
-        # SLOWER at >=4 cores (interleaved A/B at local[4], 60k entities:
-        # links 163-169 s three-tier vs 87-113 s two-phase, identical
-        # checksums): the exact role_tool_sig comparator alone admits a
-        # pair past any cheap-only bound (weight +2.12 vs the -3.88 cut),
-        # so the extra tier pruned almost nothing and its pairs<->records
-        # join + Arrow boundary were pure overhead.
+        # two-phase scoring: phase 1 runs the full-text Jaccard (on the
+        # per-record token-hash arrays), role signature AND the
+        # Jaro-Winkler pandas UDF (short first-turn strings, cheap even as
+        # pure Python); only pairs whose phase-1 weight can still clear the
+        # threshold join the fat per-turn arrays and pay the O(L^2)
+        # turn-alignment comparator.  The bound is sound, so the final
+        # links are byte-identical to single-phase scoring.  Deferring JW
+        # into its own middle tier was measured SLOWER at >=4 cores
+        # (interleaved A/B at local[4], 60k entities: links 163-169 s
+        # three-tier vs 87-113 s two-phase, identical checksums): the exact
+        # role_tool_sig comparator alone admits a pair past any cheap-only
+        # bound (weight +2.12 vs the -3.88 cut), so the extra tier pruned
+        # almost nothing and its pairs<->records join + Arrow boundary were
+        # pure overhead.
         return S.score_pairs(
             pairs, records, comparisons, prior=cfg.prior,
             threshold=cfg.threshold, validate=False,
-            expensive_cols=[{"turn_texts"}],
+            expensive_cols={"turn_texts"},
         )
 
     links = runner.stage(

@@ -10,24 +10,27 @@ shuffle (SURVEY §3.4).  Here each stage write is:
   ``<base>/<stage>`` (overwrite) — SURVEY §7.4.6 fallback;
 - a ``_manifest.json`` next to it with: stage name, config hash, input
   manifest hashes (lineage), row counts + per-file sizes, wall time.
+  Manifests are replaced atomically (tmp file + ``os.replace``), so a crash
+  leaves the old manifest or the new one, never truncated JSON.
 
 ``StageRunner.stage(name, fn, inputs=...)`` skips recompute when a manifest
 with the same config hash + input lineage already exists (idempotent,
-exactly-once resume: the manifest is written only after a successful table
+exactly-once resume: a recompute removes the old manifest before it touches
+the table, and the new manifest is written only after a successful table
 write).
 
 Scale notes (the round-1 serial bottleneck lived here):
 
-- writes land straight from the plan's own output partitioning — NO
-  repartition by default.  Round 1 forced ``repartition(shuffle
-  partitions)`` per stage to guard against AQE coalescing a byte-small
-  output to one file (which serializes the downstream re-read); that
-  guard cost a full extra shuffle of every stage's bytes.  The session
+- writes land straight from the plan's own output partitioning — no
+  repartition.  Round 1 forced ``repartition(shuffle partitions)`` per
+  stage to guard against AQE coalescing a byte-small output to one file
+  (which serializes the downstream re-read); that guard cost a full
+  extra shuffle of every stage's bytes.  The session
   defaults make it unnecessary: ``coalescePartitions.parallelismFirst``
   (Spark's default) with ``default.parallelism = shuffle partitions``
   keeps AQE from coalescing below the configured parallelism, so stage
   outputs arrive with enough partitions and the re-read gets one split
-  per file.  ``write_partitions`` remains available to force a layout;
+  per file;
 - row counts come from parquet footer metadata via pyarrow on the driver —
   zero Spark jobs per stage boundary (the round-1 count() re-scan is gone).
 """
@@ -43,7 +46,6 @@ from hashlib import sha256
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
@@ -74,7 +76,6 @@ class StageRunner:
         config: dict | None = None,
         iceberg_catalog: str | None = None,
         validate: bool = True,
-        write_partitions: int | None = None,
         async_write: bool | None = None,
     ):
         self.spark = spark
@@ -107,15 +108,6 @@ class StageRunner:
         # writers (recorded in the manifest: async-mode wall_sec values
         # overlap, so this makes the per-stage decomposition honest)
         self._wait_secs: dict[str, float] = {}
-        # Default: NO repartition — stages write straight from the plan's
-        # own (AQE-sized) output partitioning.  Re-shuffling every stage's
-        # bytes just to shape the file count is a full extra shuffle per
-        # stage (at 100 TB, the dominant cost; at bench scale a measured
-        # ~2-4 s per stage), and parquet re-reads split large files by
-        # row-group anyway, so downstream parallelism does not depend on
-        # file count.  Pass an explicit number to force an output layout
-        # (e.g. compacting a tiny dimension to one file).
-        self.write_partitions = write_partitions
 
     # -- storage layer ------------------------------------------------------
     def _table_path(self, name: str) -> Path:
@@ -124,13 +116,19 @@ class StageRunner:
     def _manifest_path(self, name: str) -> Path:
         return self.base / f"{name}._manifest.json"
 
-    def _write(self, name: str, df: DataFrame, repartition: bool = True) -> None:
-        if repartition and self.write_partitions and self.write_partitions > 1:
-            df = df.repartition(self.write_partitions)
+    def _write(self, name: str, df: DataFrame) -> None:
         if self.iceberg_catalog:
             df.writeTo(f"{self.iceberg_catalog}.{name}").createOrReplace()
         else:
             df.write.mode("overwrite").parquet(str(self._table_path(name)))
+
+    def _write_manifest(self, name: str, manifest: dict) -> None:
+        """Replace ``name``'s manifest atomically: the JSON goes to a tmp
+        file in the same directory, then ``os.replace`` swaps it in."""
+        mpath = self._manifest_path(name)
+        tmp = mpath.with_name(f".{mpath.name}.tmp")
+        tmp.write_text(json.dumps(manifest, indent=1))
+        os.replace(tmp, mpath)
 
     def read(self, name: str) -> DataFrame:
         if self.iceberg_catalog:
@@ -220,8 +218,6 @@ class StageRunner:
             "by_reference": str(path),
             "rows": n_rows,
             "files": file_stats,
-            "partitions": [],
-            "data_hash": None,
             "columns": None,
             "wall_sec": round(time.time() - t0, 3),
             "content_hash": _stable_hash(
@@ -241,7 +237,7 @@ class StageRunner:
         if prior is None or prior.get("content_hash") != manifest["content_hash"]:
             if validator is not None and _validation_enabled():
                 validator(df)
-            mpath.write_text(json.dumps(manifest, indent=1))
+            self._write_manifest(name, manifest)
         self.manifests[name] = manifest
         self.row_counts[name] = n_rows
         return df
@@ -257,9 +253,10 @@ class StageRunner:
         """Run (or resume) one checkpointed stage.
 
         Resume rule: if a manifest exists whose config hash and input lineage
-        match, the stored table is returned without recompute.  The manifest
-        is only written after the table write succeeds, so a killed run
-        resumes from the last *completed* stage (SURVEY §7.4.4).
+        match, the stored table is returned without recompute.  A recompute
+        deletes the old manifest first, and the new one is only written
+        after the table write succeeds, so a killed run resumes from the
+        last *completed* stage (SURVEY §7.4.4).
 
         ``validator`` (a contracts.validate_* function) runs against the
         *stored* table — one cheap parquet re-scan per check instead of
@@ -292,6 +289,12 @@ class StageRunner:
                 self.manifests[name] = m
                 self.row_counts[name] = m["rows"]
                 return self.read(name)
+        # Recompute: drop the old manifest BEFORE the table is overwritten,
+        # so a crash between the write and the new manifest leaves no
+        # manifest to resume from rather than an old one over new data.
+        mpath.unlink(missing_ok=True)
+        self.manifests.pop(name, None)
+        self.row_counts.pop(name, None)
 
         t0 = time.time()
         df = fn()
@@ -321,13 +324,7 @@ class StageRunner:
                     if self._errors:
                         return  # an upstream write failed; don't pile on
                     self._wait_secs[name] = round(time.time() - tw, 3)
-                    # no repartition: downstream consumers read the CACHE,
-                    # not these files, so shuffling every stage's bytes just
-                    # to shape the file count is pure overhead here — encode
-                    # straight from the cached partitioning (the sync path
-                    # keeps the repartition because its re-READ needs one
-                    # split per file for downstream parallelism)
-                    self._write(name, cached, repartition=False)
+                    self._write(name, cached)
                     self._emit_manifest(name, cached, inputs, t0)
                 except BaseException as e:  # surfaced via _raise_pending_errors
                     self._errors.append(e)
@@ -360,35 +357,13 @@ class StageRunner:
             n_rows, file_stats = _parquet_footer_stats(self._table_path(name))
         # content_hash folds in per-file row counts + byte sizes, so a data
         # change at equal total row count still invalidates downstream
-        # lineage in almost all cases; EASYLINK_LINEAGE_DETAIL=1 adds a
-        # true order-independent data checksum (one extra scan job) plus
-        # per-partition counters.
-        data_hash = None
-        per_part: list[tuple[int, int]] = []
-        if os.environ.get("EASYLINK_LINEAGE_DETAIL", "0") == "1":
-            rows = (
-                stored.groupBy(F.spark_partition_id().alias("p"))
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(
-                        F.bit_xor(F.xxhash64(*[F.col(f"`{c}`") for c in stored.columns])),
-                        F.lit(0),
-                    ).alias("h"),
-                )
-                .collect()
-            )
-            per_part = sorted((r["p"], r["n"]) for r in rows)
-            data_hash = 0
-            for r in rows:
-                data_hash ^= r["h"]
+        # lineage in almost all cases
         manifest = {
             "stage": name,
             "config_hash": self.config_hash,
             "lineage": lineage,
             "rows": n_rows,
             "files": file_stats,
-            "partitions": per_part,
-            "data_hash": data_hash,
             "columns": stored.columns,
             "wall_sec": round(time.time() - t0, 3),
             # async mode: stage walls overlap; this is the slice of wall_sec
@@ -398,12 +373,11 @@ class StageRunner:
                 {
                     "rows": n_rows,
                     "files": file_stats,
-                    "data_hash": data_hash,
                     "config": self.config_hash,
                     "lineage": lineage,
                 }
             ),
         }
-        self._manifest_path(name).write_text(json.dumps(manifest, indent=1))
+        self._write_manifest(name, manifest)
         self.manifests[name] = manifest
         self.row_counts[name] = n_rows

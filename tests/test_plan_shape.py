@@ -75,3 +75,20 @@ def test_filter_pushdown_reaches_scan(spark, records):
     plan = _plan(flt)
     assert "PushedFilters: [" in plan
     assert "IsNotNull(n_turns)" in plan or "GreaterThan(n_turns,3)" in plan
+
+
+def test_two_phase_scoring_single_arrow_boundary(spark, records):
+    """The flagship's two-phase scoring crosses the JVM/Python boundary
+    once (the Jaro-Winkler pandas UDF, Arrow-batched — never the per-row
+    pickled BatchEvalPython), and no scan reads the full text: the
+    full-text Jaccard runs on the per-record ``full_tokens`` arrays."""
+    pairs = B.block_on_key(records, F.col("first_prefix"))
+    links = S.score_pairs(
+        pairs, records, validate=False, expensive_cols={"turn_texts"}
+    )
+    plan = _plan(links)
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "BatchEvalPython" not in plan
+    for line in plan.splitlines():
+        if "ReadSchema" in line:
+            assert "full_text_norm" not in line, line

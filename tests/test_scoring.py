@@ -153,22 +153,13 @@ def test_two_phase_scoring_identical_links(spark):
         pairs, recs, prior=0.01, threshold=0.85, validate=False,
         expensive_cols={"turn_texts", "first_text_norm"})
     assert {tuple(r) for r in one.collect()} == {tuple(r) for r in three.collect()}
-    # the flagship's ordered CASCADE (JVM comparators -> Python JW ->
-    # O(L^2) turn alignment), each phase re-tightening the bound — the
-    # link set must still be byte-identical to single-phase scoring
-    four = S.score_pairs(
-        pairs, recs, prior=0.01, threshold=0.85, validate=False,
-        expensive_cols=[{"first_text_norm"}, {"turn_texts"}])
-    assert {tuple(r) for r in one.collect()} == {tuple(r) for r in four.collect()}
 
 
-def test_token_hash_flag_produces_identical_links(spark):
-    """EASYLINK_TOKEN_HASH_JACCARD only changes WHERE the full-text
-    tokenization is paid (per record vs per pair) — the gamma levels, and
-    therefore the link set, must be identical either way.  Guards the
-    flag's correctness so the deployment choice (on for multi-executor
-    clusters, off for this bench host — see
-    default_transcript_comparisons) is purely a performance knob."""
+def test_token_hash_jaccard_produces_identical_links(spark):
+    """The default full-text Jaccard runs on per-record token-hash arrays
+    (``full_tokens``); that only changes WHERE tokenization is paid (per
+    record vs per pair) — the link set must equal scoring with the
+    string comparator on ``full_text_norm``."""
     from easylink_spark.operators.blocking import block_on_key
     from easylink_spark.operators.features import conversation_features
     from easylink_spark.synth import synth_transcripts
@@ -176,25 +167,22 @@ def test_token_hash_flag_produces_identical_links(spark):
     t = synth_transcripts(spark, n_entities=60, seed=9).drop("entity_id")
     recs = conversation_features(t, "transcripts", 24, validate=False)
     pairs = block_on_key(recs, F.col("first_prefix"))
-    split_path = S.score_pairs(
-        pairs, recs, S.default_transcript_comparisons(token_hash=False),
-        prior=0.01, threshold=0.85, validate=False)
-    hash_path = S.score_pairs(
-        pairs, recs, S.default_transcript_comparisons(token_hash=True),
-        prior=0.01, threshold=0.85, validate=False)
-    assert ({tuple(r) for r in split_path.collect()}
-            == {tuple(r) for r in hash_path.collect()})
-    # env plumbing: default off, =1 switches the comparator input column
-    cols = {c.name: c.input_col for c in S.default_transcript_comparisons()}
-    assert cols["full_jaccard"] == "full_text_norm"
-    import os as _os
-    _os.environ["EASYLINK_TOKEN_HASH_JACCARD"] = "1"
-    try:
-        cols = {c.name: c.input_col
-                for c in S.default_transcript_comparisons()}
-        assert cols["full_jaccard"] == "full_tokens"
-    finally:
-        _os.environ.pop("EASYLINK_TOKEN_HASH_JACCARD")
+    default = S.default_transcript_comparisons()
+    assert {c.name: c.input_col for c in default}["full_jaccard"] == "full_tokens"
+    string_split = [
+        S.Comparison("full_jaccard", "full_text_norm",
+                     S._leveled(C.token_set_jaccard, [0.70, 0.45]),
+                     m=[0.03, 0.15, 0.82], u=[0.94, 0.05, 0.01])
+        if c.name == "full_jaccard" else c
+        for c in default
+    ]
+    hash_path = S.score_pairs(pairs, recs, prior=0.01, threshold=0.85,
+                              validate=False)
+    split_path = S.score_pairs(pairs, recs, string_split, prior=0.01,
+                               threshold=0.85, validate=False)
+    hash_links = {tuple(r) for r in hash_path.collect()}
+    assert hash_links
+    assert hash_links == {tuple(r) for r in split_path.collect()}
 
 
 def test_value_pairs_u_matches_bruteforce_both_universes(spark):
