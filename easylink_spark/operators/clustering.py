@@ -2,8 +2,9 @@
 
 - ``connected_components``: iterative **large-star / small-star** (Kiveris et
   al., "Connected Components in MapReduce and Beyond", SoCC'14) over a
-  DataFrame edge list.  O(log n) rounds; each round is two groupBy-join
-  passes; lineage is truncated every round with ``localCheckpoint``.
+  DataFrame edge list.  O(log n) rounds; each round is two window passes,
+  one job per round; lineage is truncated every round with
+  ``localCheckpoint``.
   The reference reaches CC through splink's duckdb label propagation
   (steps/splink/splink_links_to_clusters.py:37-51) and networkx
   (steps/cascading/one_to_many_links_to_clusters.py:84-100) — both
@@ -55,8 +56,14 @@ SRC, DST = "src", "dst"
 def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
     """For each node u: emit (v, min(N(u) ∪ {u})) for every neighbor v > u.
 
+    One window pass: min(N(u)) is a window over ``partitionBy(src)`` — the
+    partitioning a groupBy would need — so nothing is joined back and the
+    round is one job (plans/r07/cc_round_{before,after}.txt).  The trade: a
+    window cannot use AQE skew-join splitting, which only rounds over 4M
+    edges (planned with AQE on) could have used.
+
     ``dedup=False`` skips the trailing distinct (one exchange + its
-    planning).  Semantically safe always — ``_small_star``'s groupBy-min is
+    planning).  Semantically safe always — ``_small_star``'s window min is
     duplicate-insensitive and its own trailing distinct restores the set —
     but duplicates inflate the intermediate row count by up to the node
     degree, so callers only skip it on SMALL frontiers where the inflation
@@ -65,32 +72,33 @@ def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
     bi = edges.select(SRC, DST).union(
         edges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
     )
-    nbr_min = bi.groupBy(SRC).agg(F.min(DST).alias("_m"))
     out = (
-        bi.filter(F.col(DST) > F.col(SRC))
-        .join(nbr_min, SRC)
+        bi.withColumn("_m", F.min(DST).over(Window.partitionBy(SRC)))
+        .filter(F.col(DST) > F.col(SRC))
         .select(
             F.col(DST).alias(SRC),
             F.least(F.col("_m"), F.col(SRC)).alias(DST),
         )
-        .filter(F.col(SRC) != F.col(DST))
     )
     return out.distinct() if dedup else out
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Direct edges large->small; for each u: m = min(N_small(u) ∪ {u});
-    emit (v, m) for v in N_small(u) ∪ {u}, minus self-loops."""
+    emit (v, m) for v in N_small(u) ∪ {u}, minus self-loops.
+
+    One window pass, as ``_large_star``: both emitted edges of a row come
+    from the same windowed row, so the input subtree is computed once."""
     directed = edges.select(
         F.greatest(SRC, DST).alias(SRC), F.least(SRC, DST).alias(DST)
     ).filter(F.col(SRC) != F.col(DST))
-    nbr_min = directed.groupBy(SRC).agg(F.min(DST).alias("_m"))
-    to_nbrs = directed.join(nbr_min, SRC).select(
-        F.col(DST).alias(SRC), F.col("_m").alias(DST)
-    )
-    to_self = nbr_min.select(F.col(SRC), F.col("_m").alias(DST))
     return (
-        to_nbrs.union(to_self)
+        directed.withColumn("_m", F.min(DST).over(Window.partitionBy(SRC)))
+        .select(F.explode(F.array(
+            F.struct(F.col(DST).alias(SRC), F.col("_m").alias(DST)),
+            F.struct(F.col(SRC), F.col("_m").alias(DST)),
+        )).alias("e"))
+        .select("e.*")
         .filter(F.col(SRC) != F.col(DST))
         .distinct()
     )
@@ -257,16 +265,11 @@ def connected_components(
                 "finish": "union_find",
             })
         return _union_find_assignments(cleaned)
-    # Round-6: the no-hint probe no longer pre-deduplicates.  Routing to
-    # the union-find finish needs only an UPPER BOUND on the edge count —
-    # duplicates and orientation do not change a union-find's result (the
-    # edge_count_hint argument) — and a plain count() is one narrow-scan
-    # job, where the former distinct().localCheckpoint() probe eagerly
-    # materialized a full shuffle (under AQE, localCheckpoint plans and
-    # runs every query stage immediately even with eager=False): measured
-    # 4.8 s -> ~1.2 s for a 100k-edge frontier at local[32].  A large graph
-    # pays one extra narrow pass before the distinct below — a few percent
-    # of a single star round's 4-5 shuffles.
+    # The no-hint probe is a plain count(): routing to union-find needs only
+    # an UPPER BOUND on the edge count (duplicates and orientation do not
+    # change a union-find's result), and a count is one narrow-scan job where
+    # a distinct().localCheckpoint() probe materializes a full shuffle under
+    # AQE (measured 4.8 -> ~1.2 s for a 100k-edge frontier at local[32]).
     if 0 < small_graph_edges and edge_count_hint is None:
         # a present-but-large hint is authoritative: don't pay a count job
         # to second-guess an upper bound the caller already knows
@@ -301,17 +304,14 @@ def connected_components(
     initial_edges = prev_sig[0]
     rounds = 0
     at_fixpoint = False
-    # Round-6, scale-adaptive round planning (guide §1.2 step 1, §2.4):
-    # each star round is 4-5 Exchanges, and with AQE every exchange is a
-    # separately materialized query stage with a driver re-planning barrier
-    # — for a SMALL frontier the round wall is almost entirely that fixed
-    # driver latency (measured ~1.6 s/round for a 5k-edge frontier at
-    # local[32]).  The frontier size is known exactly from the signature,
-    # so small rounds are planned with shuffle.partitions derived from the
-    # edge count and AQE off; large frontiers keep AQE (runtime coalescing
-    # + skew-join splitting matter there, and per-stage latency amortizes).
-    # Conf mutation is safe here: the round loop is driver-sequential, and
-    # the session confs are restored in the finally below.
+    # Scale-adaptive round planning: under AQE every exchange of a round is
+    # a separately materialized query stage behind a driver re-planning
+    # barrier, so a SMALL frontier's round wall is almost all fixed latency.
+    # The signature gives the frontier size exactly, so small rounds run
+    # with AQE off and shuffle.partitions derived from the edge count; large
+    # frontiers keep AQE's runtime coalescing (per-stage latency amortizes).
+    # Conf mutation is safe: the round loop is driver-sequential and the
+    # finally below restores the session confs.
     conf = edges.sparkSession.conf
     _SMALL_ROUND_EDGES = 4_000_000  # ~a few hundred MB of string pairs
     _ROUND_EDGES_PER_PARTITION = 250_000

@@ -39,9 +39,10 @@ def uf_components(edges: list[tuple[str, str]]) -> set[frozenset[str]]:
     return {frozenset(v) for v in comps.values()}
 
 
-def spark_components(spark, edges: list[tuple[str, str]]) -> set[frozenset[str]]:
+def spark_components(spark, edges: list[tuple[str, str]],
+                     small_graph_edges: int | None = None) -> set[frozenset[str]]:
     df = spark.createDataFrame(edges, "src string, dst string")
-    assign = G.connected_components(df)
+    assign = G.connected_components(df, small_graph_edges=small_graph_edges)
     rows = assign.collect()
     comps: dict[str, set[str]] = {}
     for r in rows:
@@ -60,19 +61,73 @@ def test_cc_cluster_ids_are_min_key(spark):
     assert rows == {"a": "a", "b": "a", "c": "a"}
 
 
+def random_multigraph(rng: random.Random, n: int, m: int) -> list[tuple[str, str]]:
+    """m random edges over n nodes: self-loops dropped, reversed and
+    duplicate edges kept."""
+    edges = [
+        (f"n{rng.randrange(n):03d}", f"n{rng.randrange(n):03d}")
+        for _ in range(m)
+    ]
+    return [(a, b) for a, b in edges if a != b]
+
+
 def test_cc_random_graphs_match_oracle(spark):
-    rng = random.Random(7)
-    for trial in range(5):
-        n = rng.randint(10, 120)
-        m = rng.randint(5, 3 * n)
-        edges = [
-            (f"n{rng.randrange(n):03d}", f"n{rng.randrange(n):03d}")
-            for _ in range(m)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        if not edges:
-            continue
-        assert spark_components(spark, edges) == uf_components(edges), f"trial {trial}"
+    """Both finishes against the oracle: the default threshold takes the
+    union-find finish, ``small_graph_edges=0`` runs the star rounds to
+    their fixpoint."""
+    for small_graph_edges in (None, 0):
+        rng = random.Random(7)
+        for trial in range(5):
+            n = rng.randint(10, 120)
+            edges = random_multigraph(rng, n, rng.randint(5, 3 * n))
+            if not edges:
+                continue
+            got = spark_components(spark, edges, small_graph_edges)
+            assert got == uf_components(edges), (
+                f"trial {trial}, small_graph_edges={small_graph_edges}"
+            )
+
+
+# -- one Kiveris step vs a pure-Python reference -----------------------------
+def ref_large_star(edges: list[tuple[str, str]]) -> set[tuple[str, str]]:
+    nbrs: dict[str, set[str]] = {}
+    for a, b in edges:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    out = set()
+    for u, ns in nbrs.items():
+        m = min(ns | {u})
+        out |= {(v, m) for v in ns if v > u}
+    return out
+
+
+def ref_small_star(edges: list[tuple[str, str]]) -> set[tuple[str, str]]:
+    smaller: dict[str, set[str]] = {}
+    for a, b in edges:
+        if a != b:
+            smaller.setdefault(max(a, b), set()).add(min(a, b))
+    out = set()
+    for u, ns in smaller.items():
+        m = min(ns)
+        out |= {(v, m) for v in ns | {u} if v != m}
+    return out
+
+
+def test_star_steps_match_reference(spark):
+    """Each half of a round, on its own, is the Kiveris step as edge sets —
+    including ``_large_star(dedup=True)``, which only frontiers over 4M
+    edges reach inside ``connected_components``."""
+    rng = random.Random(11)
+    edges = random_multigraph(rng, 40, 90)
+    df = spark.createDataFrame(edges, "src string, dst string")
+
+    def edge_set(out):
+        return {(r["src"], r["dst"]) for r in out.collect()}
+
+    want_large = ref_large_star(edges)
+    assert edge_set(G._large_star(df, dedup=True)) == want_large
+    assert edge_set(G._large_star(df, dedup=False)) == want_large
+    assert edge_set(G._small_star(df)) == ref_small_star(edges)
 
 
 def test_cc_long_chain_converges(spark):

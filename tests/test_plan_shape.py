@@ -10,10 +10,13 @@ the plan text itself.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from easylink_spark.operators import blocking as B
+from easylink_spark.operators import clustering as G
 from easylink_spark.operators import scoring as S
 from easylink_spark.operators.features import conversation_features
 from easylink_spark.synth import synth_transcripts
@@ -21,6 +24,13 @@ from easylink_spark.synth import synth_transcripts
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _operators(plan: str) -> list[str]:
+    """One operator name per node of an executed-plan tree string."""
+    bodies = (re.sub(r"^[\s:+\-]*(\*\(\d+\)\s*)?", "", ln)
+              for ln in plan.splitlines())
+    return [re.split(r"[\s(\[]", b, maxsplit=1)[0] for b in bodies if b]
 
 
 @pytest.fixture(scope="module")
@@ -92,3 +102,54 @@ def test_two_phase_scoring_single_arrow_boundary(spark, records):
     for line in plan.splitlines():
         if "ReadSchema" in line:
             assert "full_text_norm" not in line, line
+
+
+@pytest.fixture(scope="module")
+def chain_2k(spark, tmp_path_factory):
+    """A 2k-node path read from PARQUET: the scan's size statistics reach
+    the checkpointed frontiers, so Catalyst sees small relations it could
+    broadcast (an in-memory frame has no such statistics)."""
+    d = str(tmp_path_factory.mktemp("cc") / "chain")
+    edges = [(f"v{i:05d}", f"v{i + 1:05d}") for i in range(1999)]
+    spark.createDataFrame(edges, "src string, dst string").write.parquet(d)
+    return spark.read.parquet(d)
+
+
+def test_cc_small_round_is_two_window_passes(spark, chain_2k):
+    """One small star round, planned as ``connected_components`` plans it
+    (AQE off, shuffle partitions from the edge count — 1 here), is two
+    window passes over three exchanges: no join back of the per-node
+    minimum, so no broadcast job and no duplicated large-star subtree."""
+    frontier = chain_2k.localCheckpoint()
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in ("spark.sql.adaptive.enabled",
+                                      "spark.sql.shuffle.partitions")}
+    conf.set("spark.sql.adaptive.enabled", "false")
+    conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        plan = _plan(G._small_star(G._large_star(frontier, dedup=False)))
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+    ops = _operators(plan)
+    assert ops.count("BroadcastExchange") == 0, plan
+    assert not [op for op in ops if op.endswith("Join")], plan
+    assert ops.count("Window") == 2, plan
+    assert ops.count("Exchange") == 3, plan
+
+
+def test_cc_star_rounds_run_one_job_each(spark, chain_2k):
+    """Pure star rounds on a 2k-node chain: one Spark job per round (its
+    checkpoint + signature action) plus a constant for the initial
+    frontier — no per-round broadcast jobs."""
+    sc = spark.sparkContext
+    group = "test_cc_star_rounds_run_one_job_each"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    st: dict = {}
+    try:
+        G.connected_components(chain_2k, small_graph_edges=0, stats=st)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= st["rounds"] + 3, f"{jobs} jobs for {st['rounds']} rounds"
