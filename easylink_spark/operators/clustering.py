@@ -10,8 +10,9 @@
   (steps/cascading/one_to_many_links_to_clusters.py:84-100) — both
   single-node; this kernel is the distributed replacement.
 - ``links_to_clusters``: G1/G2 — threshold links, CC, stable cluster ids.
-  Records NOT involved in an accepted link are excluded (the reference's
-  explicit semantic, one_to_many_links_to_clusters.py:80-83 comment).
+  Every record key in the links table is a node, so a record whose links
+  are all below the threshold is a singleton cluster
+  (splink_links_to_clusters.py:28-34).
 - ``clusters_to_links``: J2 — within-cluster pair expansion at P=1.
 - ``update_clusters``: G3 — merge known+new cluster assignments through a
   bipartite record<->cluster-marker graph (cheaper than the reference's
@@ -111,11 +112,10 @@ def _union_find_assignments(edges: DataFrame) -> DataFrame:
     either column — identical semantics to the star-forest extraction, and
     a pure function of the edge set (deterministic at any parallelism).
 
-    Rows with a NULL ``dst`` are ISOLATED-NODE DECLARATIONS: the ``src``
-    node joins the universe (and becomes its own singleton component unless
-    some real edge connects it).  Callers fuse singleton emission into this
-    one task instead of paying a distinct + anti-join + union of extra
-    Spark jobs after the fact (links_to_clusters' small-graph path).
+    Rows with a NULL ``dst`` are node declarations (``connected_components``'
+    contract): the ``src`` node joins the universe and becomes its own
+    singleton component unless some real edge connects it, so singletons
+    come out of this one task with no distinct + anti-join + union after.
 
     Only called on frontiers below ``small_graph_edges`` (default 500k
     pairs ≈ tens of MB of string keys), where log-n distributed rounds are
@@ -177,116 +177,76 @@ def _union_find_assignments(edges: DataFrame) -> DataFrame:
     )
 
 
-def _resolve_small_edges(small_graph_edges: int | None) -> int:
-    """Resolve the hybrid-CC small-graph threshold (env
-    ``EASYLINK_CC_SMALL_EDGES``, default 500k).  The union-find finish
-    funnels the whole frontier through ONE task (repartition(1) + pandas
-    concat) — its memory bound is the frontier size — so an oversized env
-    override is clamped: a typo must not route a multi-GB edge set into a
-    single executor task."""
-    import os
-
-    if small_graph_edges is not None:
-        return small_graph_edges
-    small_graph_edges = int(os.environ.get("EASYLINK_CC_SMALL_EDGES", "500000"))
-    _CAP = 5_000_000
-    if small_graph_edges > _CAP:
-        import warnings
-
-        warnings.warn(
-            f"EASYLINK_CC_SMALL_EDGES={small_graph_edges} exceeds the "
-            f"single-task union-find memory bound; clamping to {_CAP}",
-            stacklevel=2,
-        )
-        small_graph_edges = _CAP
-    return small_graph_edges
+# Union-find finish bound: the finish funnels the whole frontier through ONE
+# task (repartition(1) + pandas concat), so this caps its memory.
+_SMALL_GRAPH_EDGES = 500_000
+_MAX_ROUNDS = 50
 
 
 def connected_components(
     edges: DataFrame,
-    src: str = SRC,
-    dst: str = DST,
-    max_iter: int = 50,
-    checkpoint_every: int = 1,
     small_graph_edges: int | None = None,
     stats: dict | None = None,
     edge_count_hint: int | None = None,
 ) -> DataFrame:
-    """Edge list (any orientation, string node ids) -> (node, component)
-    where component = min node id in the component (total order = string
-    order).  Nodes with no edges do not appear (callers decide singleton
-    semantics, G4).
+    """Edge list ``(src, dst)`` (any orientation, string node ids) ->
+    (node, component) where component = min node id in the component
+    (total order = string order).
 
-    Hybrid kernel: iterate large-star/small-star (Kiveris et al.) only
-    while the frontier exceeds ``small_graph_edges`` (env
-    ``EASYLINK_CC_SMALL_EDGES``, default 500_000); below that, finish with
-    a one-job single-partition union-find (``_union_find_assignments``).
-    The star rounds preserve connectivity and never drop a non-root node,
-    so union-find over a partially-contracted frontier yields the same
-    (node -> component-min) map as running the rounds to fixpoint.  Set
-    ``small_graph_edges=0`` to force pure star rounds (property tests
-    compare the two paths).
+    A row ``(x, NULL)`` is a NODE DECLARATION: ``x`` is a node even if no
+    edge touches it, and then comes out as its own singleton component.
+    Rows with a NULL ``src`` and self-loops are dropped; a node that
+    appears only in those rows is not in the output.
 
-    ``edge_count_hint`` is an UPPER BOUND on the edge count the caller
-    already knows without a job (e.g. the links stage's checkpoint manifest
-    row count — parquet footer metadata, zero scans).  When the bound is
-    at or under ``small_graph_edges`` the count-and-checksum probe job and
-    the pre-dedup of the edge set are skipped entirely and the frontier
-    goes straight to the union-find finish (duplicates and orientation do
-    not change a union-find's result, and the bound caps the single task's
-    memory the same way the measured count did).  At bench scale that probe
-    job was ~1.5-2 s of per-run fixed cost that no core count divides; at
-    100 TB the hint is simply absent (no caller knows a small bound) and
-    the distributed star rounds run as before.
+    Routing, one rule: the bound is ``edge_count_hint`` — an UPPER BOUND
+    on the rows of ``edges``, declarations included, that the caller
+    already knows without a job (e.g. from the links stage's checkpoint
+    manifest row count) — or else one plain ``count()`` of the rows.  When
+    the bound is at or under ``small_graph_edges`` (``None`` = 500_000)
+    every row goes to a one-job single-partition union-find
+    (``_union_find_assignments``): duplicates and orientation do not
+    change its result, so no pre-dedup and no round runs.  Otherwise
+    large-star/small-star rounds (Kiveris et al.) run over the real edges
+    while the frontier exceeds ``small_graph_edges``, then union-find
+    finishes the contracted frontier alone.  The star rounds preserve
+    connectivity and never drop a non-root node, so that yields the same
+    (node -> component-min) map as running the rounds to fixpoint.  Both
+    large-graph finishes add the declarations in one distributed
+    ``groupBy(node).min(component)``, so the single union-find task never
+    holds more than ``small_graph_edges`` rows.  ``small_graph_edges=0``
+    skips the count and forces pure star rounds to their fixpoint
+    (property tests compare the paths).
 
     Fixpoint detection: (edge count, xor-style hash checksum) stable across
     a large-star+small-star round.  Every round the result is
     localCheckpoint-ed to truncate lineage (SURVEY §4.2.2); on a real
     cluster with a checkpoint dir configured, ``DataFrame.checkpoint`` is
-    the durable alternative.
+    the durable alternative.  ``stats``, when given, receives ``rounds``,
+    ``initial_edges``, ``edge_count_hint``, ``final_edges`` and ``finish``.
     """
-    small_graph_edges = _resolve_small_edges(small_graph_edges)
-    cleaned = (
-        edges.select(F.col(src).alias(SRC), F.col(dst).alias(DST))
-        .filter(F.col(SRC).isNotNull() & F.col(DST).isNotNull())
-        .filter(F.col(SRC) != F.col(DST))
+    if small_graph_edges is None:
+        small_graph_edges = _SMALL_GRAPH_EDGES
+    graph = edges.select(SRC, DST).filter(
+        F.col(SRC).isNotNull()
+        & (F.col(DST).isNull() | (F.col(SRC) != F.col(DST)))
     )
-    if (
-        edge_count_hint is not None
-        and 0 < small_graph_edges
-        and edge_count_hint <= small_graph_edges
-    ):
-        if stats is not None:
-            stats.update({
-                "rounds": 0,
-                "initial_edges": None,  # never counted — that's the point
-                "edge_count_hint": edge_count_hint,
-                "final_edges": None,
-                "finish": "union_find",
-            })
-        return _union_find_assignments(cleaned)
-    # The no-hint probe is a plain count(): routing to union-find needs only
-    # an UPPER BOUND on the edge count (duplicates and orientation do not
-    # change a union-find's result), and a count is one narrow-scan job where
-    # a distinct().localCheckpoint() probe materializes a full shuffle under
-    # AQE (measured 4.8 -> ~1.2 s for a 100k-edge frontier at local[32]).
-    if 0 < small_graph_edges and edge_count_hint is None:
-        # a present-but-large hint is authoritative: don't pay a count job
-        # to second-guess an upper bound the caller already knows
-        n_edges_raw = cleaned.count()
-        if n_edges_raw <= small_graph_edges:
-            if stats is not None:
-                stats.update({
-                    "rounds": 0,
-                    # pre-dedup count: an upper bound, not the distinct size
-                    "initial_edges": n_edges_raw,
-                    "edge_count_hint": edge_count_hint,
-                    "final_edges": None,
-                    "finish": "union_find",
-                })
-            return _union_find_assignments(cleaned)
+    real = graph.filter(F.col(DST).isNotNull())
+    declared = graph.filter(F.col(DST).isNull())
+    stats = {} if stats is None else stats
+    stats["edge_count_hint"] = edge_count_hint
+    bound, initial_edges = edge_count_hint, None
+    # The probe is a plain count(): routing needs only an upper bound, and a
+    # count is one narrow-scan job where a distinct().localCheckpoint() probe
+    # materializes a full shuffle under AQE (measured 4.8 -> ~1.2 s for a
+    # 100k-edge frontier at local[32]).  A present hint is authoritative.
+    if bound is None and small_graph_edges > 0:
+        bound = initial_edges = graph.count()  # pre-dedup, not distinct
+    if bound is not None and bound <= small_graph_edges:
+        stats.update(rounds=0, initial_edges=initial_edges, final_edges=None,
+                     finish="union_find")
+        return _union_find_assignments(graph)
     cur = (
-        cleaned.distinct()
+        real.distinct()
         # lazy plan-side; under AQE the checkpoint still materializes at
         # the signature() action below — one job either way
         .localCheckpoint(eager=False)
@@ -332,14 +292,13 @@ def connected_components(
                 conf.set(k, v)
 
     try:
-        for _ in range(max_iter):
+        for _ in range(_MAX_ROUNDS):
             if prev_sig[0] <= small_graph_edges:
                 break
             _plan_round(prev_sig[0])
             small_round = prev_sig[0] <= _SMALL_ROUND_EDGES
             cur = _small_star(_large_star(cur, dedup=not small_round))
-            if checkpoint_every:
-                cur = cur.localCheckpoint(eager=False)
+            cur = cur.localCheckpoint(eager=False)
             sig = signature(cur)
             rounds += 1
             if sig == prev_sig:
@@ -348,26 +307,31 @@ def connected_components(
             prev_sig = sig
         else:
             raise RuntimeError(
-                f"connected_components: no fixpoint in {max_iter} rounds"
+                f"connected_components: no fixpoint in {_MAX_ROUNDS} rounds"
             )
     finally:
         for k, v in saved_conf.items():
             conf.set(k, v)
 
-    if stats is not None:
-        stats.update({
-            "rounds": rounds,
-            "initial_edges": initial_edges,
-            "final_edges": prev_sig[0],
-            "finish": "star_fixpoint" if at_fixpoint or prev_sig[0] == 0
-            else "union_find",
-        })
-    if not at_fixpoint and prev_sig[0] > 0:
-        return _union_find_assignments(cur)
-    # At the fixpoint the edge set is a star forest: (node -> component min).
-    members = cur.select(F.col(SRC).alias("node"), F.col(DST).alias("component"))
-    roots = cur.select(F.col(DST).alias("node"), F.col(DST).alias("component")).distinct()
-    return members.union(roots).distinct()
+    at_fixpoint = at_fixpoint or prev_sig[0] == 0
+    stats.update(rounds=rounds, initial_edges=initial_edges,
+                 final_edges=prev_sig[0],
+                 finish="star_fixpoint" if at_fixpoint else "union_find")
+    if at_fixpoint:
+        # the edge set is a star forest: (node -> component min)
+        assign = cur.select(
+            F.col(SRC).alias("node"), F.col(DST).alias("component")
+        ).union(cur.select(F.col(DST).alias("node"), F.col(DST).alias("component")))
+    else:
+        assign = _union_find_assignments(cur)
+    # A declared node's own row (x, x) never undercuts its component's min;
+    # the min also collapses the star forest's repeated roots.
+    return (
+        assign.union(declared.select(F.col(SRC).alias("node"),
+                                     F.col(SRC).alias("component")))
+        .groupBy("node")
+        .agg(F.min("component").alias("component"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -377,7 +341,6 @@ def links_to_clusters(
     links: DataFrame,
     threshold: float = 0.5,
     validate: bool = True,
-    emit_singletons: bool = True,
     edge_count_hint: int | None = None,
 ) -> DataFrame:
     """Threshold links, run CC, emit clusters contract.
@@ -386,61 +349,29 @@ def links_to_clusters(
     keys appearing in the links table (splink_links_to_clusters.py:28-34
     builds dummy_records_df from every left/right key), so a node whose
     links are all below ``threshold`` still gets a **singleton cluster**
-    (cluster id = its own record key).  ``emit_singletons=False`` restricts
-    output to nodes with >= 1 accepted link — the cascading one-to-many
-    step's exclusion semantic (one_to_many_links_to_clusters.py:80-83
-    comment), kept as an explicit flag.  Cluster ID = min record key in
-    component (stable; splink's representative id is likewise the min node).
+    (cluster id = its own record key).  Every key goes to
+    ``connected_components`` as a node declaration next to the thresholded
+    edges.  Cluster ID = min record key in component (stable; splink's
+    representative id is likewise the min node).
+
+    ``edge_count_hint``: the caller's known row count of ``links`` (e.g.
+    its checkpoint manifest, parquet footer metadata — no job); without it
+    CC counts the graph.  Each link gives at most one edge and two
+    declarations, so three times the hint bounds the graph's rows.
     """
     keyed = links.select(
         record_key(f"`{LEFT_DATASET}`", f"`{LEFT_ID}`").alias(SRC),
         record_key(f"`{RIGHT_DATASET}`", f"`{RIGHT_ID}`").alias(DST),
         F.col(PROBABILITY).alias("_p"),
     )
-    edges = keyed.filter(F.col("_p") >= F.lit(threshold)).select(SRC, DST)
-    # edge_count_hint: the caller's known row count of ``links`` (e.g. its
-    # checkpoint manifest, parquet footer metadata — no job) bounds the
-    # post-threshold edge count from above.  Round-6: when no hint is
-    # known, ONE plain count of the thresholded edges takes its place —
-    # connected_components would run an equivalent probe job anyway, so
-    # this moves that job earlier at no extra cost and lets every caller
-    # (tutorial, person-linkage, streaming merge — the round-5 VERDICT's
-    # unplumbed call sites) reach the fused singleton union-find below.
-    small = _resolve_small_edges(None)
-    if edge_count_hint is None:
-        edge_count_hint = edges.count()
-    if (
-        edge_count_hint is not None
-        and 0 < small
-        and edge_count_hint <= small
-        and emit_singletons
-    ):
-        # Small-graph fast path with singletons FUSED into the one-task
-        # union-find: every node of ``keyed`` (thresholded or not) rides
-        # along as an isolated-node declaration (NULL dst), so the kernel
-        # emits the complete assignment directly — no count-probe job and
-        # no distinct + anti-join + union jobs after the fact.  Row volume
-        # is bounded by 3x the hint (edges + both endpoints of every
-        # link), well inside the single-task memory bound
-        # _resolve_small_edges enforces.  Semantics identical to the
-        # general path below — the singleton property tests compare them.
-        null_dst = F.lit(None).cast("string").alias(DST)
-        declared = keyed.select(F.col(SRC), null_dst).union(
-            keyed.select(F.col(DST).alias(SRC), null_dst)
-        )
-        assign = _union_find_assignments(edges.union(declared))
-    else:
-        assign = connected_components(edges, edge_count_hint=edge_count_hint)
-        if emit_singletons:
-            nodes = (
-                keyed.select(F.col(SRC).alias("node"))
-                .union(keyed.select(F.col(DST).alias("node")))
-                .distinct()
-            )
-            singles = nodes.join(assign, "node", "left_anti").select(
-                "node", F.col("node").alias("component")
-            )
-            assign = assign.union(singles)
+    null_dst = F.lit(None).cast("string").alias(DST)
+    graph = (
+        keyed.filter(F.col("_p") >= F.lit(threshold)).select(SRC, DST)
+        .union(keyed.select(SRC, null_dst))
+        .union(keyed.select(F.col(DST).alias(SRC), null_dst))
+    )
+    hint = None if edge_count_hint is None else 3 * edge_count_hint
+    assign = connected_components(graph, edge_count_hint=hint)
     ds, rid = split_record_key("node")
     out = assign.select(
         ds.alias(INPUT_RECORD_DATASET),

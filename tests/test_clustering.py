@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from easylink_spark import contracts as K
@@ -169,20 +170,52 @@ def test_cc_star_rounds_are_logarithmic(spark):
     regression to linear label-propagation behavior fails loudly."""
     edges = [(f"p{i:04d}", f"p{i+1:04d}") for i in range(255)]
     df = spark.createDataFrame(edges, "src string, dst string")
-    # force pure star rounds and count them via max_iter bisection: the
-    # kernel raises if it exceeds max_iter, so the smallest passing
-    # max_iter IS the round count (fixpoint included).
-    rounds = None
-    for k in range(1, 17):
-        try:
-            G.connected_components(df, max_iter=k, small_graph_edges=0).count()
-            rounds = k
-            break
-        except RuntimeError:
-            continue
-    assert rounds is not None and rounds <= 12, (
-        f"path-256 took {rounds} star rounds — expected O(log n) (<=12)"
+    stats: dict = {}
+    G.connected_components(df, small_graph_edges=0, stats=stats)
+    assert stats["finish"] == "star_fixpoint"
+    assert stats["rounds"] <= 12, (
+        f"path-256 took {stats['rounds']} star rounds — expected O(log n) (<=12)"
     )
+
+
+def test_cc_no_fixpoint_raises(spark, monkeypatch):
+    """The round guard: a graph that needs more than ``_MAX_ROUNDS`` star
+    rounds raises instead of returning a partial contraction."""
+    edges = [(f"p{i:04d}", f"p{i+1:04d}") for i in range(63)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    monkeypatch.setattr(G, "_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="no fixpoint in 1 rounds"):
+        G.connected_components(df, small_graph_edges=0)
+
+
+def test_cc_declared_nodes_through_every_finish(spark):
+    """``(x, NULL)`` rows declare nodes: every finish — star fixpoint, star
+    rounds then union-find, pure union-find — returns each declared node,
+    as its own singleton when no edge touches it, next to the edges'
+    components."""
+    rng = random.Random(17)
+    # dense (150 edges over 40 nodes): the star forest has under |E|//3
+    # edges, so the middle threshold stops the rounds before the fixpoint
+    edges = random_multigraph(rng, 40, 150)
+    declared = [f"n{rng.randrange(60):03d}" for _ in range(30)]
+    rows = edges + [(x, None) for x in declared]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(rows, "src string, dst string")
+    want = uf_components(edges + [(x, x) for x in declared])
+    finishes = []
+    for thr in (0, len(edges) // 3, 10**9):
+        stats: dict = {}
+        assign = G.connected_components(df, small_graph_edges=thr, stats=stats)
+        comps: dict[str, set[str]] = {}
+        nodes = assign.collect()
+        for r in nodes:
+            comps.setdefault(r["component"], set()).add(r["node"])
+        assert len(nodes) == len({r["node"] for r in nodes}), thr
+        assert {frozenset(v) for v in comps.values()} == want, (thr, stats)
+        assert all(r["component"] == min(comps[r["component"]]) for r in nodes)
+        finishes.append((stats["finish"], stats["rounds"] > 0))
+    assert finishes == [("star_fixpoint", True), ("union_find", True),
+                        ("union_find", False)]
 
 
 # -- links_to_clusters --------------------------------------------------------
@@ -222,18 +255,12 @@ def test_links_to_clusters_threshold_and_exclusion(spark):
         frozenset({"d-__-4"}),
         frozenset({"d-__-5"}),
     }
-    # Explicit exclusion flag = the cascading one-to-many semantic
-    # (one_to_many_links_to_clusters.py:80-83): unlinked nodes dropped.
-    excluded = G.links_to_clusters(links, threshold=0.5, emit_singletons=False)
-    assert partition_of(excluded) == {
-        frozenset({"d-__-1", "d-__-2", "d-__-3"})
-    }
 
 
 def test_links_to_clusters_hint_path_identical(spark):
-    """The edge_count_hint fast path (fused singleton union-find, no probe
-    job) must produce exactly the general path's clusters — singletons from
-    sub-threshold links included."""
+    """The edge_count_hint path (no count job) must produce exactly the
+    counted path's clusters — singletons from sub-threshold links
+    included."""
     random.seed(11)
     rows = []
     for i in range(200):
@@ -243,12 +270,39 @@ def test_links_to_clusters_hint_path_identical(spark):
     general = G.links_to_clusters(links, threshold=0.5)
     hinted = G.links_to_clusters(links, threshold=0.5, edge_count_hint=len(rows))
     assert partition_of(hinted) == partition_of(general)
-    # emit_singletons=False with a hint: union-find over edges only
-    gen_ex = G.links_to_clusters(links, threshold=0.5, emit_singletons=False)
-    hint_ex = G.links_to_clusters(
-        links, threshold=0.5, emit_singletons=False, edge_count_hint=len(rows)
+
+
+def test_links_to_clusters_star_path_keeps_singletons(spark, monkeypatch):
+    """Over the union-find bound, ``links_to_clusters`` goes through the
+    star rounds; records whose links are all sub-threshold still come out
+    as singletons, whether the rounds reach their fixpoint or union-find
+    finishes the contracted frontier."""
+    rng = random.Random(23)
+    rows = [("d", f"{rng.randrange(40):02d}", "d", f"{rng.randrange(40):02d}",
+             rng.random()) for _ in range(300)]
+    # keys 40-59 appear only in sub-threshold links
+    rows += [("d", f"{40 + i:02d}", "d", f"{40 + (i + 1) % 20:02d}", 0.1)
+             for i in range(20)]
+    links = _links(spark, rows)
+    keys = {f"d-__-{r[1]}" for r in rows} | {f"d-__-{r[3]}" for r in rows}
+    want = uf_components(
+        [(f"d-__-{a}", f"d-__-{b}") for _, a, _, b, p in rows if p >= 0.5]
+        + [(k, k) for k in keys]
     )
-    assert partition_of(hint_ex) == partition_of(gen_ex)
+    stats: dict = {}
+    cc = G.connected_components
+    monkeypatch.setattr(
+        G, "connected_components", lambda e, **kw: cc(e, stats=stats, **kw)
+    )
+    finishes = []
+    # 0: star rounds to the fixpoint; 60: under the thresholded edge count
+    # but over the 40-node star forest, so union-find finishes mid-rounds
+    for bound in (0, 60, G._SMALL_GRAPH_EDGES):
+        monkeypatch.setattr(G, "_SMALL_GRAPH_EDGES", bound)
+        assert partition_of(G.links_to_clusters(links, threshold=0.5)) == want
+        finishes.append((stats["finish"], stats["rounds"] > 0))
+    assert finishes == [("star_fixpoint", True), ("union_find", True),
+                        ("union_find", False)]
 
 
 def test_clusters_to_links_roundtrip(spark):
@@ -311,8 +365,6 @@ def test_one_to_many_highest_id_breaks_ties(spark):
 
 
 def test_one_to_many_rejects_bad_links(spark):
-    import pytest
-
     with pytest.raises(ValueError, match="within the no_duplicates_dataset"):
         G.one_to_many_links_to_clusters(
             _links(spark, [("ref", "1", "ref", "2", 0.9)]), "ref", 0.5

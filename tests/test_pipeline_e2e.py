@@ -89,8 +89,10 @@ def test_e2e_f1_gate(pipeline):
 
 def test_e2e_partition_equality(pipeline):
     """Label-invariant partition equality vs the truth partition restricted
-    to duplicated entities (singletons are excluded by links_to_clusters
-    semantics — one_to_many_links_to_clusters.py:80-83)."""
+    to duplicated entities.  links_to_clusters gives every record key of
+    the links table a cluster, but the links stage keeps only pairs at or
+    above the threshold, so a record with no accepted link is in neither
+    partition."""
     _, labels, clusters, _ = pipeline
     truth_partition = {
         frozenset(r["ids"])
